@@ -46,12 +46,23 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read parquet state if it exists on the table's (possibly remote)
-    filesystem, else None. os.path.exists would be a driver-local check
-    that silently discards remote state (ADVICE r2)."""
+    """Read the state a writer is about to replace, if it exists on the
+    table's (possibly remote) filesystem, else None. os.path.exists would
+    be a driver-local check that silently discards remote state (ADVICE
+    r2). A :func:`_staged_overwrite` that crashed between its two renames
+    leaves ``path`` missing and the previous state at ``<path>.__old__``:
+    that state is renamed back first, so the writer merges into it
+    instead of folding into an empty state and dropping every key. Only
+    the lease owner restores: a live foreign writer between its renames
+    makes this raise :class:`ConcurrentWriterError`."""
     fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
-        return None
+        _, jold = _hadoop_fs(spark, f"{path}{_OLD_SUFFIX}")
+        if not fs.exists(jold):
+            return None
+        acquire_writer_lease(spark, path)
+        if not fs.rename(jold, jpath):
+            raise IOError(f"could not restore {path} from {jold}")
     return spark.read.parquet(path)
 
 
@@ -826,14 +837,16 @@ def upsert_into(
     ``ralf/v2/table_state.py:29-46``, amortized over a batch). Idempotent
     for replays (re-upserting the same batch is a no-op).
 
-    ``table_format="parquet"`` (default): reduce the batch to
-    latest-per-key first (only per-key winners shuffle), union with
-    current state, keep per-key winners, replace. The replace is staged
-    (write to ``.__staging__``, rewrite ``path``, drop staging) so a
-    mid-write failure never corrupts *staging and current at once*, but
-    the final rewrite itself is NOT atomic on plain parquet — a concurrent
-    reader can observe a partial ``path``, and the WHOLE state rewrites
-    every batch, which at 100 TB of state is the dominant cost.
+    ``table_format="parquet"`` (default): union the raw batch with the
+    current state and keep the per-key winners in one ``latest()``
+    aggregation (its map-side partial aggregation already reduces the
+    batch to per-key winners, so the batch is not pre-reduced in a shuffle
+    of its own; ``max_by`` over the union equals ``max_by`` over the
+    per-side winners). A first upsert writes ``batch.latest()``. The new
+    state is written once, to ``<path>.__staging__``, and published by a
+    directory rename (:func:`_staged_overwrite`): atomic per directory on
+    local filesystems and HDFS, a copy on S3A. The WHOLE state is still
+    rewritten every batch, which at 100 TB of state is the dominant cost.
 
     ``table_format="delta"``: the production spelling — a real
     ``MERGE INTO`` against a Delta table at ``path``. Atomic (readers see
@@ -854,20 +867,14 @@ def upsert_into(
     spark = batch.df.sparkSession
     # single-writer guard (r12): fail loudly before the staged replace
     acquire_writer_lease(spark, path)
-    batch_latest = batch.latest().df
     current = _try_read_parquet(spark, path)
+    merged = batch
     if current is not None:
-        merged = (
-            FeatureTable(
-                current.unionByName(batch_latest),
-                key=batch.key, ts=batch.ts, seq=batch.seq,
-            )
-            .latest()
-            .df
+        merged = FeatureTable(
+            current.unionByName(batch.df),
+            key=batch.key, ts=batch.ts, seq=batch.seq,
         )
-    else:
-        merged = batch_latest
-    _staged_overwrite(spark, merged, path)
+    _staged_overwrite(spark, merged.latest().df, path)
 
 
 def merge_upsert_condition(
@@ -966,27 +973,51 @@ def _delta_merge_upsert(path: str, batch: FeatureTable) -> None:
     )
 
 
+#: where :func:`_staged_overwrite` parks the previous contents of a path
+#: between the two renames of its publish
+_OLD_SUFFIX = ".__old__"
+
+
 def _staged_overwrite(
     spark: SparkSession, df: DataFrame, path: str, partition_by: str | None = None
 ) -> None:
-    """Write ``df`` over ``path`` via a staging directory (the output may
-    derive from ``path``'s current contents, so a direct overwrite would
-    read and clobber the same files), then remove the staging dir."""
+    """Replace ``path`` with ``df`` by writing ``<path>.__staging__`` and
+    publishing it with a directory rename. The output may derive from
+    ``path``'s current contents, so a direct overwrite would read and
+    clobber the same files.
+
+    The data is written once. Under the writer lease (fence + heartbeat,
+    r13) the publish is two ``FileSystem.rename`` calls: ``path`` to
+    ``<path>.__old__``, then staging to ``path``; ``.__old__`` is deleted
+    after. Each rename is atomic per directory on local filesystems and
+    HDFS, so a reader sees the old or the new directory, never a partial
+    one; between the renames ``path`` is briefly missing. On S3A a
+    directory rename is a copy, so there the publish is not atomic. A
+    crash before the first rename leaves ``path`` intact (the stale
+    staging is deleted before the next write); a crash between the
+    renames is rolled back by the next writer's :func:`_try_read_parquet`."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    fs, jpath = _hadoop_fs(spark, path)
     tmp = f"{path}.__staging__"
+    jtmp, jold = jvm_path(tmp), jvm_path(f"{path}{_OLD_SUFFIX}")
+    fs.delete(jtmp, True)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(tmp)
-    # fence + heartbeat keeper (r13): the staging write above is the long
-    # step; publish over ``path`` only while still the owner, renewing
-    # through the final rewrite
+    # the staging write above is the long step; publish only while still
+    # the lease owner
     with hold_writer_lease(spark, path):
-        reread = spark.read.parquet(tmp).write.mode("overwrite")
-        if partition_by:
-            reread = reread.partitionBy(partition_by)
-        reread.parquet(path)
-    fs, jtmp = _hadoop_fs(spark, tmp)
-    fs.delete(jtmp, True)
+        if fs.exists(jpath):
+            fs.delete(jold, True)
+            if not fs.rename(jpath, jold):
+                raise IOError(f"publish: could not move {path} aside")
+        if not fs.rename(jtmp, jpath):
+            raise IOError(
+                f"publish: could not rename {tmp} to {path}; the previous "
+                f"state is at {jold}, the next writer restores it"
+            )
+    fs.delete(jold, True)
 
 
 class StateConnector(ABC):
@@ -1027,8 +1058,8 @@ class StateConnector(ABC):
         key, num_buckets)`` handle.
 
         Published via :func:`_staged_overwrite` (r14, ADVICE r13): the
-        full export lands in a staging directory first, and the target
-        is rewritten only under the writer lease — a crash during the
+        full export lands in a staging directory first, and is renamed
+        over the target only under the writer lease — a crash during the
         long distributed write leaves the target untouched instead of a
         partial tree a fresh connector handle would happily load, and a
         second concurrent exporter to the same target fails loudly."""
@@ -1097,12 +1128,15 @@ class ParquetStateConnector(StateConnector):
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.num_buckets))
 
     def save(self, table: FeatureTable) -> None:
+        """Full refresh, published like :meth:`delete`: ``table`` may be a
+        transform of :meth:`load` on this same path, so an in-place
+        overwrite would delete the files its own plan reads."""
         state = table.latest() if (table.ts or table.seq) else table
-        (
-            state.df.withColumn("bucket", self._bucket())
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.path)
+        _staged_overwrite(
+            state.df.sparkSession,
+            state.df.withColumn("bucket", self._bucket()),
+            self.path,
+            partition_by="bucket",
         )
 
     def load(self, spark: SparkSession) -> FeatureTable:

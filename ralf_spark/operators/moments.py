@@ -18,8 +18,10 @@ partial aggregation). Properties:
   batch computation to 1e-9).
 
 ``merge_moments`` is pure DataFrame logic, so it slots into
-``foreachBatch`` for streaming or a nightly batch upsert via
-``connectors.upsert_into``'s staged-overwrite pattern.
+``foreachBatch`` for streaming or a nightly batch upsert published like
+``connectors.upsert_into``: written once to a staging directory, then
+renamed over the state (atomic per directory on local filesystems and
+HDFS, a copy on S3A).
 """
 
 from __future__ import annotations

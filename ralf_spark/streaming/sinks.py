@@ -10,9 +10,10 @@ connectors; its ``Sink`` op is a pass-through writer
 - ``foreach_batch_latest_upsert``: the state-table maintenance loop — each
   micro-batch MERGEs into the persisted latest-per-key table. On a lakehouse
   table format this is a real ``MERGE INTO``; the parquet spelling below is
-  read-union-recompute-overwrite, which is correct and idempotent for
-  bounded replays (exactly-once not concurrent-writer-safe — a production
-  deployment points this at Delta/Iceberg).
+  read-union-recompute, published by a directory rename, which is correct
+  and idempotent for bounded replays (single-writer by lease, not
+  concurrent-writer-safe — a production deployment points this at
+  Delta/Iceberg).
 """
 
 from __future__ import annotations
@@ -54,10 +55,12 @@ def foreach_batch_latest_upsert(
 ) -> DataStreamWriter:
     """Maintain a persisted latest-per-key state table from a stream.
 
-    Each micro-batch: reduce the batch to latest-per-key, union with the
-    current state, keep the per-key winner by (ts, seq), atomically replace
-    the state directory. The batch analog of the reference's per-record
-    upsert (``ralf/v2/table_state.py:29-46``).
+    Each micro-batch: union the raw batch with the current state, keep the
+    per-key winner by (ts, seq) in one aggregation (the batch is not
+    pre-reduced; map-side partial aggregation does that), write the new
+    state once and publish it by a directory rename — atomic per directory
+    on local filesystems and HDFS, a copy on S3A. The batch analog of the
+    reference's per-record upsert (``ralf/v2/table_state.py:29-46``).
 
     ``table_format="delta"`` routes each micro-batch through a real
     ``MERGE INTO`` (atomic, touched-files-only) instead of the parquet
@@ -110,12 +113,12 @@ def foreach_batch_kv_upsert(
 #: that produced this table version) means the marker commits with the
 #: data in the same write — it can never disagree with the data it
 #: describes (VERDICT r6 #4; the previous driver-local
-#: ``.__last_batch__`` file could). Note the residual crash window:
-#: ``_staged_overwrite``'s final publish is a parquet overwrite (delete
-#: + rewrite), not a filesystem rename, so a crash mid-publish can
-#: leave a partial state table; recovery is "restart the stream from
-#: the checkpoint" (the staging copy re-derives the same batch), not
-#: marker/data divergence.
+#: ``.__last_batch__`` file could). ``_staged_overwrite`` publishes the
+#: new table by directory rename (atomic per directory on local
+#: filesystems and HDFS, a copy on S3A). A crash between its two renames
+#: leaves the previous table at ``<path>.__old__``; the next fold's
+#: ``_load_state`` renames it back, and the stream's checkpoint replays
+#: the batch — never marker/data divergence.
 LAST_BATCH_COL = "_last_batch_id"
 
 
@@ -855,8 +858,8 @@ def _store_state(
     spark: SparkSession, merged: DataFrame, path: str, batch_id: int
 ) -> None:
     """Stamp every row with ``batch_id`` and replace the state directory
-    — data and exactly-once marker commit in the same write (see the
-    ``LAST_BATCH_COL`` note for the residual non-atomic-publish window)."""
+    — data and exactly-once marker commit in the same write, published by
+    one directory rename (see the ``LAST_BATCH_COL`` note)."""
     from ralf_spark.connectors import _staged_overwrite
 
     _staged_overwrite(
@@ -875,17 +878,19 @@ def foreach_batch_moments_upsert(
     a stream — incremental mean/variance features without reprocessing
     history (``operators/moments.py``: each micro-batch reduces map-side
     to one summary row per key, then one full-outer merge join against
-    the state; the staged overwrite is the same crash-safe pattern as
-    ``upsert_into``).
+    the state; the new state is written once to a staging directory and
+    published by a directory rename, as in ``upsert_into``).
 
     NOTE: unlike latest-per-key upserts, the moments merge is NOT
     idempotent under replay (a re-applied batch double-counts);
     exactly-once here relies on the checkpointed batch id — skip batches
     whose id is not greater than the last applied, recorded IN the state
     table (``LAST_BATCH_COL``, every row stamped) so data and marker
-    commit atomically in ``_staged_overwrite``'s directory swap on any
-    filesystem. A transactional table format's (appId, version) txn API
-    is the equivalent lakehouse spelling. ``buckets=N``: hash-bucketed
+    commit together in ``_staged_overwrite``'s directory rename (atomic
+    per directory on local filesystems and HDFS, a copy on S3A; a crash
+    between its renames is rolled back by the next fold). A
+    transactional table format's (appId, version) txn API is the
+    equivalent lakehouse spelling. ``buckets=N``: hash-bucketed
     state layout — per-batch cost ∝ touched buckets, not key count, with
     the marker (and replay skip) per bucket (see
     :func:`_bucketed_fold_upsert`)."""

@@ -290,26 +290,29 @@ class FeatureTable:
     def point_query_df(self, key_value: Any) -> DataFrame:
         """The point-lookup PLAN: latest-per-key state filtered to one key.
 
-        The key predicate is applied BEFORE the ``max_by`` aggregate — a
-        post-``latest()`` filter would sit on the aggregated payload
-        struct's field (``latest`` re-emits columns via ``_rec.*``), which
-        Catalyst cannot push through the agg; filtering the keyed input
-        first is equivalent (the payload's key field equals the grouping
-        key by construction) and lands in the scan's ``PushedFilters``
-        (plan-asserted in tests): only the key's own rows are read and
-        aggregated, never the full state. This is the oracle-checkable
-        serving read (driver-gated r7, VERDICT r6 #2)."""
-        filtered = self._with(
+        Filter to the key, then keep the top row by ``(ts, seq)``
+        descending with NULL last — the row ``latest()``'s ``max_by``
+        picks, whose struct ordering puts NULL below every value. The
+        filtered rows all share one key, so no grouping is needed: the
+        plan is a ``TakeOrderedAndProject`` with no Exchange (one job),
+        and the key predicate lands in the scan's ``PushedFilters``
+        (plan-asserted in tests): only the key's own rows are read, never
+        the full state. This is the oracle-checkable serving read
+        (driver-gated r7, VERDICT r6 #2)."""
+        order = [c.desc_nulls_last() for c in self.order_cols()]
+        return (
             self.df.where(F.col(self.key) == F.lit(key_value))
+            .orderBy(*order)
+            .limit(1)
         )
-        return filtered.latest().df
 
     def point_query(self, key_value: Any) -> list[Row]:
         """Point lookup on the latest-per-key state (``ralf/table.py:179-191``,
-        ``ralf/client.py:8-11``). Convenience form — computes the state view
-        inline; for repeated serving-path lookups, persist the state with
-        ``ralf_spark.connectors.ParquetStateConnector`` (key-bucketed layout,
-        partition-pruned point reads) or ``SqliteStateConnector`` (indexed)."""
+        ``ralf/client.py:8-11``): :meth:`point_query_df` collected — one
+        Spark job, no shuffle. For repeated serving-path lookups, persist
+        the state with ``ralf_spark.connectors.ParquetStateConnector``
+        (key-bucketed layout, partition-pruned point reads) or
+        ``SqliteStateConnector`` (indexed)."""
         return self.point_query_df(key_value).collect()
 
     def bulk_query(self, collect: bool = False) -> DataFrame | list[Row]:

@@ -246,6 +246,7 @@ def test_upsert_into_cleans_staging_dir(spark, tmp_path):
     upsert_into(path, _events(spark, [(1, 10, 1, 1.0)]))
     upsert_into(path, _events(spark, [(2, 10, 2, 2.0)]))
     assert not os.path.exists(path + ".__staging__")
+    assert not os.path.exists(path + ".__old__")
     got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
     assert got == {1: 1.0, 2: 2.0}
 
@@ -257,7 +258,67 @@ def test_parquet_delete_cleans_staging_dir(spark, tmp_path):
     con.save(_events(spark, [(1, 10, 1, 1.0), (2, 10, 2, 2.0)]))
     con.delete(spark, [1])
     assert not os.path.exists(str(tmp_path / "st") + ".__staging__")
+    assert not os.path.exists(str(tmp_path / "st") + ".__old__")
     assert con.count(spark) == 1
+
+
+def test_upsert_into_writes_state_once(spark, tmp_path, monkeypatch):
+    """An upsert into existing state writes parquet exactly once, to the
+    staging directory, and publishes it by rename: ``path`` itself is
+    never the target of a write."""
+    from pyspark.sql import DataFrameWriter
+
+    from ralf_spark.connectors import upsert_into
+
+    path = str(tmp_path / "state")
+    upsert_into(path, _events(spark, [(1, 10, 1, 1.0)]))
+    targets = []
+    inner = DataFrameWriter.parquet
+
+    def parquet(self, target, *args, **kwargs):
+        targets.append(target)
+        return inner(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    upsert_into(path, _events(spark, [(1, 20, 2, 5.0), (2, 10, 3, 2.0)]))
+    assert targets == [path + ".__staging__"]
+    got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
+    assert got == {1: 5.0, 2: 2.0}
+
+
+def test_upsert_into_restores_state_after_crash_between_renames(
+    spark, tmp_path
+):
+    """A publish that died after moving ``path`` aside but before renaming
+    the staging directory into place leaves ``path`` missing, the previous
+    state at ``.__old__`` and a stale ``.__staging__``. The next upsert
+    must restore ``.__old__`` and merge into it, not fold into an empty
+    state and drop every key."""
+    import os
+
+    from ralf_spark.connectors import upsert_into
+
+    path = str(tmp_path / "state")
+    upsert_into(path, _events(spark, [(1, 10, 1, 1.0), (2, 10, 2, 2.0)]))
+    os.rename(path, path + ".__old__")
+    spark.createDataFrame([(9, 9, 9, 9.0)], "user_id long, ts long, seq long, "
+                          "value double").write.parquet(path + ".__staging__")
+    upsert_into(path, _events(spark, [(2, 20, 3, 7.0), (3, 10, 4, 3.0)]))
+    got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
+    assert got == {1: 1.0, 2: 7.0, 3: 3.0}
+    assert not os.path.exists(path + ".__old__")
+    assert not os.path.exists(path + ".__staging__")
+
+
+def test_parquet_save_over_own_load(spark, tmp_path):
+    """``load -> transform -> save`` on one path: the save is staged, so
+    its plan never reads files the overwrite has already deleted."""
+    con = ParquetStateConnector(str(tmp_path / "st"), key="user_id", num_buckets=4)
+    con.save(_events(spark, [(1, 10, 1, 1.0), (2, 10, 2, 2.0)]))
+    doubled = con.load(spark).df.withColumn("value", F.col("value") * 2)
+    con.save(FeatureTable(doubled, key="user_id"))
+    got = {r.user_id: r.value for r in con.load(spark).df.collect()}
+    assert got == {1: 2.0, 2: 4.0}
 
 
 # ------------------------------------------------------------ snapshot diff

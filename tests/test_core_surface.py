@@ -215,6 +215,32 @@ def test_point_query_pushes_key_filter_to_scan(spark, tmp_path):
     assert any("k" in f and "EqualTo" in f for f in plan_filters), plan_filters
 
 
+def test_point_query_plan_has_no_exchange(spark):
+    """One key's rows need no grouping: the lookup is a top-1 sort over
+    the filtered scan — no shuffle."""
+    t = _keyed(spark, [("a", 1, 1, 1.0), ("b", 2, 2, 2.0)])
+    assert "Exchange" not in explain_str(t.point_query_df("a"))
+
+
+def test_point_query_matches_latest_for_every_key(spark):
+    """``point_query(k)`` is ``latest()`` filtered to ``k``: NULL ``ts``
+    orders below every value, ``ts`` ties fall to ``seq``, and an absent
+    key returns ``[]``."""
+    t = _keyed(spark, [
+        ("a", 1, 1, 1.0), ("a", None, 9, 2.0), ("a", 5, 2, 3.0),
+        ("b", 7, 3, 4.0), ("b", 7, 8, 5.0), ("b", 7, 4, 6.0),
+        ("c", None, 5, 7.0), ("c", None, 6, 8.0),
+        ("d", 3, None, 9.0), ("d", 3, 1, 10.0),
+    ])
+    latest = {r.k: r for r in t.latest().collect()}
+    for k, row in latest.items():
+        assert t.point_query(k) == [row], k
+    assert {k: r.v for k, r in latest.items()} == {
+        "a": 3.0, "b": 5.0, "c": 8.0, "d": 10.0
+    }
+    assert t.point_query("zzz") == []
+
+
 # ------------------------------------------------------------ Schema (§1.1)
 
 def test_schema_struct_type_and_validate(spark):
