@@ -23,6 +23,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,7 +34,12 @@ from ralf_spark.functions.hashing import (
     stable_hash64,
 )
 from ralf_spark.functions.text import distinct_shingles, hashed_shingles
-from ralf_spark.operators.util import attach_cached, ensure_parallelism
+from ralf_spark.operators.util import (
+    cache_scope,
+    ensure_parallelism,
+    local_checkpoint,
+    persist,
+)
 from ralf_spark.table import FeatureTable
 
 # ------------------------------------------------------------------ E1 exact
@@ -248,8 +255,6 @@ def near_dup_pairs(
 
     Returns (id1, id2, jaccard). No cross join anywhere: candidate
     generation is a bucket equi-join, so cost is Σ bucket² not n².
-    After the caller's final action, release the persisted intermediates
-    with :func:`ralf_spark.operators.util.unpersist_cached`.
     """
     hash_fn = hash_fn or default_hash_fn()
     if num_perm % bands:
@@ -278,10 +283,8 @@ def near_dup_pairs(
     # without a persist each branch re-tokenizes the corpus. At cluster
     # scale the same multi-pass algorithm checkpoints this projection to
     # parquet; persist() is the single-job spelling.
-    docs = (
-        ids.select("_id", sh_expr.alias("_sh"))
-        .where(F.size("_sh") > 0)
-        .persist()
+    docs = persist(
+        ids.select("_id", sh_expr.alias("_sh")).where(F.size("_sh") > 0)
     )
     # one-expr spellings of the perm/band loops (r15): bit-identical to
     # the Column-API trees, ~7x cheaper to CONSTRUCT (py4j round trips)
@@ -290,19 +293,17 @@ def near_dup_pairs(
     )
     # Both sides of the candidate self-join read the bucket table; persist
     # so the num_perm MinHash transforms run once, not twice.
-    buckets = (
+    buckets = persist(
         sig.select(
             "_id",
             F.explode(
                 F.expr(_band_array_sql("_sig", bands, rows_per_band, hash_fn))
             ).alias("_b"),
-        )
-        .select(
+        ).select(
             "_id",
             F.col("_b.band").alias("_band"),
             F.col("_b.key").alias("_key"),
         )
-        .persist()
     )
 
     a, b = buckets.alias("a"), buckets.alias("b")
@@ -331,7 +332,11 @@ def near_dup_pairs(
         lambda: _pair_bound_from_buckets(buckets, "_band", "_key"),
     )
 
-    verified = (
+    # output barrier: pairs are tiny (∝ dups) and consumers (cluster
+    # closure, keep-best, the curation pipeline) reference the pair set
+    # several times — without it every reference re-executes the bucket
+    # join + verification chain (r8 A/B: 1.7x on consumers)
+    return persist(
         _verify_join(docs, cand, hint_broadcast=hint, broadcast_docs=small)
         .select(
             "id1",
@@ -342,13 +347,7 @@ def near_dup_pairs(
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        # output barrier: pairs are tiny (∝ dups) and consumers (cluster
-        # closure, keep-best, the curation pipeline) reference the pair
-        # set several times — without it every reference re-executes the
-        # bucket join + verification chain (r8 A/B: 1.7x on consumers)
-        .persist()
     )
-    return attach_cached(verified, [docs, buckets, verified])
 
 
 #: Auto-spelling threshold for the verification joins (r9, VERDICT r8 #1):
@@ -726,15 +725,13 @@ def jaccard_pairs_inverted(
     # sides) — Spark does not CSE across DAG branches, so each reference
     # would otherwise re-tokenize the corpus. Cluster-scale spelling of the
     # same multi-pass algorithm: checkpoint these to parquet.
-    docs = (
+    docs = persist(
         ids.select(
             "_id",
             distinct_shingles(
                 F.col("_text"), shingle_n, token_mode
             ).alias("_sh"),
-        )
-        .where(F.size("_sh") > 0)
-        .persist()
+        ).where(F.size("_sh") > 0)
     )
     posting = docs.select("_id", F.explode("_sh").alias("_s"))
     rare = (
@@ -743,8 +740,7 @@ def jaccard_pairs_inverted(
         .where(F.col("_df") <= max_df)
         .select("_s")
     )
-    posting_r = posting.join(rare, "_s").persist()
-    cached = [docs, posting_r]
+    posting_r = persist(posting.join(rare, "_s"))
     a, b = posting_r.alias("a"), posting_r.alias("b")
     cand = (
         a.join(
@@ -764,7 +760,7 @@ def jaccard_pairs_inverted(
         broadcast_candidates,
         lambda: _pair_bound_from_buckets(posting_r, "_s"),
     )
-    out = (
+    return persist(  # output barrier, same rationale as near_dup_pairs
         _verify_join(docs, cand, hint_broadcast=hint, broadcast_docs=small)
         .select(
             "id1",
@@ -775,10 +771,7 @@ def jaccard_pairs_inverted(
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        .persist()  # output barrier, same rationale as near_dup_pairs
     )
-    cached.append(out)
-    return attach_cached(out, cached)
 
 
 def jaccard_pairs_inverted_sql(
@@ -910,12 +903,10 @@ def dedup_clusters(
     (SURVEY §2.10); this completes E2 from pairs to usable clusters.
     """
     both = pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
-    edges = (
+    edges = persist(
         both.unionByName(
             pairs.select(F.col(id2).alias("a"), F.col(id1).alias("b"))
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
     # Per-iteration lineage must be SEVERED, not just cached: persist()
     # nests each round's InMemoryRelation inside the next round's plan, so
@@ -926,11 +917,10 @@ def dedup_clusters(
     # cluster, flip to reliable checkpoint (spark.sparkContext.
     # setCheckpointDir + .checkpoint()) for executor-loss tolerance —
     # identical plan shape.
-    labels = (
+    labels = local_checkpoint(
         edges.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         nbr = (
@@ -938,15 +928,13 @@ def dedup_clusters(
             .groupBy("a")
             .agg(F.min("label").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(nbr, labels.id == nbr.a, "left")
-            .select(
+        new_labels = local_checkpoint(
+            labels.join(nbr, labels.id == nbr.a, "left").select(
                 labels.id.alias("id"),
                 F.least(
                     labels.label, F.coalesce("nbr_min", labels.label)
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -957,8 +945,7 @@ def dedup_clusters(
         labels = new_labels
         if changed == 0:
             break
-    out = labels.select(F.col("id"), F.col("label").alias("cluster_rep"))
-    return attach_cached(out, [edges])
+    return labels.select(F.col("id"), F.col("label").alias("cluster_rep"))
 
 
 # --------------------------------------------- E2 span-level duplication
@@ -1167,16 +1154,14 @@ def simhash_near_dup_pairs(
     # fingerprint plan is referenced by the band explode AND both
     # verify-join sides; without the barrier it re-evaluates in each
     # (winnowing blowup class, BENCH_NOTES r3). Cluster spelling:
-    # checkpoint the fingerprint table to parquet. Released via
-    # unpersist_cached after the caller's action.
-    fp = (
+    # checkpoint the fingerprint table to parquet.
+    fp = persist(
         simhash_fingerprints_agg(
             ids, id_col="_id", text_col="_text",
             bits=bits, shingle_n=shingle_n, hash_fn=hash_fn,
         )
         .select("_id", F.col("fp").alias("_fp"))
         .where(F.col("_fp") != 0)
-        .persist()
     )
     base, rem = divmod(bits, blocks)
     widths = [base + (1 if i < rem else 0) for i in range(blocks)]
@@ -1221,7 +1206,7 @@ def simhash_near_dup_pairs(
     )
     f1 = fp.select(F.col("_id").alias("id1"), F.col("_fp").alias("_fp1"))
     f2 = fp.select(F.col("_id").alias("id2"), F.col("_fp").alias("_fp2"))
-    out = (
+    return (
         cand.join(f1, "id1")
         .join(f2, "id2")
         .withColumn(
@@ -1230,7 +1215,6 @@ def simhash_near_dup_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming")
     )
-    return attach_cached(out, [fp])
 
 
 def simhash_pairs_oracle_sql(
@@ -1314,15 +1298,13 @@ def containment_pairs(
     ids = ensure_parallelism(
         table.df.select(F.col(idc).alias("_id"), F.col(text_col).alias("_text"))
     )
-    docs = (
+    docs = persist(
         ids.select(
             "_id",
             distinct_shingles(
                 F.col("_text"), shingle_n, token_mode
             ).alias("_sh"),
-        )
-        .where(F.size("_sh") > 0)
-        .persist()
+        ).where(F.size("_sh") > 0)
     )
     posting = docs.select("_id", F.explode("_sh").alias("_s"))
     rare = (
@@ -1331,8 +1313,7 @@ def containment_pairs(
         .where(F.col("_df") <= max_df)
         .select("_s")
     )
-    posting_r = posting.join(rare, "_s").persist()
-    cached = [docs, posting_r]
+    posting_r = persist(posting.join(rare, "_s"))
     a, b = posting_r.alias("a"), posting_r.alias("b")
     cand = (
         a.join(
@@ -1372,11 +1353,9 @@ def containment_pairs(
         F.col("id1").alias("dst_id"),
         (F.col("_i") / F.col("_n2")).alias("containment"),
     )
-    out = fwd.unionByName(rev).where(
-        F.col("containment") >= threshold
-    ).persist()  # output barrier, same rationale as near_dup_pairs
-    cached.append(out)
-    return attach_cached(out, cached)
+    return persist(  # output barrier, same rationale as near_dup_pairs
+        fwd.unionByName(rev).where(F.col("containment") >= threshold)
+    )
 
 
 def containment_pairs_sql(
@@ -2093,8 +2072,7 @@ class MinHashIndex:
         new_sigs, new_buckets = self._project(
             table, text_col, count_obs=sigs_obs
         )
-        new_sigs = new_sigs.persist()
-        new_buckets = new_buckets.persist()
+        new_sigs, new_buckets = persist(new_sigs), persist(new_buckets)
         stored_b = self._read(spark, "buckets", exclude_tag=tag)
         stored_s = self._read(spark, "sigs", exclude_tag=tag)
         all_b = (
@@ -2158,7 +2136,6 @@ class MinHashIndex:
         # BHJs from its parquet snapshot. r9: hints dropped when the
         # bucket-stats bound says candidates would blow the broadcast cap.
         pairs = self._score_candidates(all_s, cand, hint, small, threshold)
-        out = attach_cached(pairs, [new_sigs, new_buckets])
         # Fold the batch in AFTER the candidate join is defined: the writes
         # below execute eagerly, but the returned plan reads the persisted
         # batch projections plus an explicit pre-add file snapshot of the
@@ -2184,7 +2161,7 @@ class MinHashIndex:
             lease_path=lease_path, writer_id=writer_id,
             expect_epoch=expect_epoch,
         )
-        return out
+        return pairs
 
     def check(
         self,
@@ -2218,8 +2195,7 @@ class MinHashIndex:
         if stored_b is None or stored_s is None:
             raise ValueError(f"MinHashIndex at {self.path} is empty")
         new_sigs, new_buckets = self._project(table, text_col)
-        new_sigs = new_sigs.persist()
-        new_buckets = new_buckets.persist()
+        new_sigs, new_buckets = persist(new_sigs), persist(new_buckets)
         other_b = (
             stored_b.unionByName(new_buckets)
             if within_batch
@@ -2260,8 +2236,7 @@ class MinHashIndex:
         hint = False if small else _choose_broadcast(
             broadcast_candidates, _check_pair_bound
         )
-        pairs = self._score_candidates(all_s, cand, hint, small, threshold)
-        return attach_cached(pairs, [new_sigs, new_buckets])
+        return self._score_candidates(all_s, cand, hint, small, threshold)
 
     def _score_candidates(
         self,
@@ -2605,15 +2580,13 @@ def cross_corpus_duplicate_spans(
     else:
         odf = other.df
         okey = other.key
-    eval_dg = (
+    # persisted: the auto-broadcast decision COUNTS this set, and the
+    # join must not re-run the whole eval tokenize/hash/distinct pipeline
+    # a second time (r12 review)
+    eval_dg = persist(
         _gram_positions(odf, okey, ocol, min_tokens, hash_fn, token_mode)
         .select("_dg")
         .distinct()
-        # persisted: the auto-broadcast decision COUNTS this set, and
-        # the join must not re-run the whole eval tokenize/hash/distinct
-        # pipeline a second time (r12 review). Released by the caller
-        # via the attach_cached convention.
-        .persist()
     )
     # r16 (the near_dup small-corpus class): when the EVAL side's parquet
     # footers prove its digest set broadcast-safe, skip the count job.
@@ -2630,9 +2603,7 @@ def cross_corpus_duplicate_spans(
     )
     probe = F.broadcast(eval_dg) if hint else eval_dg
     dup_pos = pos.join(probe, "_dg").select("_id", "_pos")
-    return attach_cached(
-        _positions_to_spans(dup_pos, min_tokens), [eval_dg]
-    )
+    return _positions_to_spans(dup_pos, min_tokens)
 
 
 def cross_corpus_duplicate_spans_sql(
@@ -2756,13 +2727,7 @@ def remove_contaminated_spans(
         min_tokens=min_tokens, hash_fn=hash_fn,
         broadcast_other=broadcast_other, token_mode=token_mode,
     )
-    # re-attach: _cut_spans returns a NEW DataFrame object, which drops
-    # the attribute-based cache handle — carry it forward so the
-    # caller's unpersist_cached still releases the eval digest set
-    return attach_cached(
-        _cut_spans(table.df, idc, text_col, spans, token_mode),
-        getattr(spans, "_ralf_cached", []),
-    )
+    return _cut_spans(table.df, idc, text_col, spans, token_mode)
 
 
 def _cut_spans(
@@ -3414,12 +3379,11 @@ class GramIndex:
             # the cached plan delivers the row count with ZERO extra jobs
             # (previously a second pos.count() job per add)
             pos_obs = Observation()
-            pos = (
+            pos = persist(
                 self._positions(table, text_col)
                 .observe(pos_obs, F.count(F.lit(1)).alias("rows"))
-                .persist()
             )
-            batch_dg = pos.select("_dg").distinct().persist()
+            batch_dg = persist(pos.select("_dg").distinct())
             n_dg = batch_dg.count()  # materializes both caches' parent scan
             batch_dup = (
                 pos.groupBy("_dg")
@@ -3439,7 +3403,6 @@ class GramIndex:
                 seen = seen_in_store.unionByName(batch_dup).distinct()
             dup_pos = pos.join(seen, "_dg").select("_id", "_pos")
             spans = _positions_to_spans(dup_pos, self.min_tokens)
-            out = attach_cached(spans, [pos, batch_dg])
             # fold AFTER the span plan is defined: the plan reads the
             # frozen pre-add file snapshot + persisted batch projections,
             # so it can never observe its own append
@@ -3457,7 +3420,7 @@ class GramIndex:
                     lease_path=lease_path, writer_id=writer_id,
                     expect_epoch=expect_epoch,
                 )
-        return out
+        return spans
 
     def check(
         self,
@@ -3486,8 +3449,8 @@ class GramIndex:
         stored = self._read(spark)
         if stored is None:
             raise ValueError(f"GramIndex at {self.path} is empty")
-        pos = self._positions(table, text_col).persist()
-        batch_dg = pos.select("_dg").distinct().persist()
+        pos = persist(self._positions(table, text_col))
+        batch_dg = persist(pos.select("_dg").distinct())
         n_dg = batch_dg.count()
         hint = _choose_broadcast(broadcast_digests, lambda: n_dg)
         probe = F.broadcast(batch_dg) if hint else batch_dg
@@ -3501,8 +3464,7 @@ class GramIndex:
             )
             seen = seen.unionByName(batch_dup).distinct()
         dup_pos = pos.join(seen, "_dg").select("_id", "_pos")
-        spans = _positions_to_spans(dup_pos, self.min_tokens)
-        return attach_cached(spans, [pos, batch_dg])
+        return _positions_to_spans(dup_pos, self.min_tokens)
 
     def retro(self, spark) -> DataFrame:
         """Corpus-wide duplicated spans over EVERYTHING ingested so far —
@@ -3849,6 +3811,25 @@ class GramIndex:
         except Exception:
             self._handoff_root(spark)
             raise
+        # a written delta is re-read from output_path, so everything the
+        # cadence persisted is released here — even on a failed write
+        with cache_scope() if output_path is not None else nullcontext():
+            return self._retro_delta_spans(
+                spark, files, sized, broadcast_digests, durability,
+                output_path, fuse_store_scan,
+            )
+
+    def _retro_delta_spans(
+        self,
+        spark,
+        files: list[str],
+        sized: list,
+        broadcast_digests: bool | None,
+        durability: str,
+        output_path: str | None,
+        fuse_store_scan: bool,
+    ) -> DataFrame:
+        """The cadence of :meth:`retro_delta` past its pre-flight."""
         store = spark.read.parquet(*files)
         done = self._retro_done_tags(spark)
         all_tags = {self._tag_of(f) for f in files}
@@ -3857,7 +3838,6 @@ class GramIndex:
             self._handoff_root(spark)
             dup_pos = store.select("_id", "_pos").where(F.lit(False))
             return _positions_to_spans(dup_pos, self.min_tokens)
-        cached: list = []
         new_tags = {self._tag_of(f) for f in new_files}
         is_new = F.split(
             F.split(F.col("_metadata.file_path"), "/_batch=")
@@ -3923,8 +3903,7 @@ class GramIndex:
                 (F.col("_touched") == 1) & (F.col("_cnt") >= 2)
             ).select("_id", "_pos")
             return self._finish_retro_delta(
-                spark, dup_pos, cached, done, all_tags,
-                durability, output_path,
+                spark, dup_pos, done, all_tags, durability, output_path
             )
 
         new_src = None
@@ -3944,12 +3923,14 @@ class GramIndex:
             # near-single-task stage — serialized back to back under
             # AQE. ensure_parallelism is metadata-only and a no-op at
             # cluster scale (a 100 TB store already yields ~10^5 splits).
-            fused = ensure_parallelism(
-                store.select("_id", "_pos", "_dg", is_new.alias("_new"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            fused = persist(
+                ensure_parallelism(
+                    store.select("_id", "_pos", "_dg", is_new.alias("_new"))
+                ),
+                StorageLevel.MEMORY_AND_DISK,
+            )
             new_src = fused.where("_new").select("_dg")
             store = fused.select("_id", "_pos", "_dg")
-            cached.append(fused)
 
         def counted(probe: DataFrame, hint: bool) -> DataFrame:
             """Corpus-wide occurrence count restricted to ``probe``'s
@@ -3980,49 +3961,44 @@ class GramIndex:
                 return True
             return _choose_broadcast(broadcast_digests, probe.count)
 
-        new_dg = (
+        new_dg = persist(
             (
                 new_src
                 if new_src is not None
                 else spark.read.parquet(*new_files).select("_dg")
-            )
-            .distinct()
-            .persist()
+            ).distinct()
         )
         hint_n = stage_hint(new_dg)
-        changed_dg = counted(new_dg, hint_n).persist()
+        changed_dg = persist(counted(new_dg, hint_n))
         # changed_dg ⊆ new_dg's digests (it is new_dg filtered by corpus
         # count), so a broadcast-safe stage 1 proves stage 2 safe — no
         # second count job in the at-scale (non-small-store) regime (r16)
         hint_c = True if hint_n else stage_hint(changed_dg)
-        touched = (
+        touched = persist(
             store.join(
                 F.broadcast(changed_dg) if hint_c else changed_dg, "_dg"
             )
             .select("_id")
             .distinct()
-            .persist()
         )
         hint_t = stage_hint(touched)
-        touched_pos = store.join(
-            F.broadcast(touched) if hint_t else touched, "_id"
-        ).persist()
-        tdg = touched_pos.select("_dg").distinct().persist()
+        touched_pos = persist(
+            store.join(F.broadcast(touched) if hint_t else touched, "_id")
+        )
+        tdg = persist(touched_pos.select("_dg").distinct())
         hint_g = stage_hint(tdg)
         dup_tdg = counted(tdg, hint_g)
         dup_pos = touched_pos.join(
             F.broadcast(dup_tdg) if hint_g else dup_tdg, "_dg"
         ).select("_id", "_pos")
-        cached += [new_dg, changed_dg, touched, touched_pos, tdg]
         return self._finish_retro_delta(
-            spark, dup_pos, cached, done, all_tags, durability, output_path
+            spark, dup_pos, done, all_tags, durability, output_path
         )
 
     def _finish_retro_delta(
         self,
         spark,
         dup_pos: DataFrame,
-        cached: list,
         done: set,
         all_tags: set,
         durability: str,
@@ -4033,9 +4009,7 @@ class GramIndex:
         window spelling and the probe-chain spelling share it)."""
         from ralf_spark.connectors import write_json_sidecar
 
-        out = attach_cached(
-            _positions_to_spans(dup_pos, self.min_tokens), cached
-        )
+        out = _positions_to_spans(dup_pos, self.min_tokens)
         covered = {"tags": sorted(done | all_tags)}
         if output_path is not None:
             # write-then-advance: the spans land durably (staged — a
@@ -4043,12 +4017,8 @@ class GramIndex:
             # BEFORE the watermark commits, so the cadence is
             # exactly-once without any caller discipline
             from ralf_spark.connectors import _staged_overwrite
-            from ralf_spark.operators.util import unpersist_cached
 
-            try:
-                _staged_overwrite(spark, out, output_path)
-            finally:
-                unpersist_cached(out)  # release even on a failed write
+            _staged_overwrite(spark, out, output_path)
             write_json_sidecar(
                 spark, f"{self.path}/grams/.retro_watermark.json", covered
             )

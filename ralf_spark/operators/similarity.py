@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ralf_spark.functions.arrays import cosine_similarity
 from ralf_spark.functions.hashing import stable_hash64
-from ralf_spark.operators.util import attach_cached, ensure_parallelism
+from ralf_spark.operators.util import ensure_parallelism, persist
 from ralf_spark.table import FeatureTable
 
 
@@ -581,10 +581,12 @@ def assign_to_seeds_two_level(
         raise ValueError("assign_to_seeds_two_level needs a keyed table")
     if nprobe < 1:
         raise ValueError("nprobe must be >= 1")
-    s = seeds.select(
-        F.col(seed_id).cast("long").alias("_sid"),
-        F.col(seed_vec).cast("array<double>").alias("_sv"),
-    ).persist()
+    s = persist(
+        seeds.select(
+            F.col(seed_id).cast("long").alias("_sid"),
+            F.col(seed_vec).cast("array<double>").alias("_sv"),
+        )
+    )
     k = s.count()
     if k == 0:
         raise ValueError("assign_to_seeds_two_level needs >= 1 seed")
@@ -634,14 +636,11 @@ def assign_to_seeds_two_level(
             )
         ).alias("_b")
     )
-    return attach_cached(
-        best.select(
-            F.col(idc),
-            F.col("_b._v").alias("_v"),
-            F.col("_b._sid").alias("cluster"),
-            F.col("_b._cos").alias("seed_cos"),
-        ),
-        [s],
+    return best.select(
+        F.col(idc),
+        F.col("_b._v").alias("_v"),
+        F.col("_b._sid").alias("cluster"),
+        F.col("_b._cos").alias("seed_cos"),
     )
 
 
@@ -682,22 +681,19 @@ def semdedup_prune(
     idc = corpus.key
     # persist the assignment: it feeds BOTH self-join sides and the final
     # flag join — without the barrier the k-cosine nearest-seed
-    # projection runs three times (r7: 9.5s -> ~4s at sf0.1). Release
-    # with unpersist_cached after the caller's action; cluster spelling
-    # = checkpoint the assignment to parquet.
-    extra_cached: list[DataFrame] = []
+    # projection runs three times (r7: 9.5s -> ~4s at sf0.1). Cluster
+    # spelling = checkpoint the assignment to parquet.
     if two_level:
         assigned = assign_to_seeds_two_level(
             corpus, seeds, n_coarse=n_coarse, nprobe=nprobe,
             vec_col=vec_col, seed_id=seed_id, seed_vec=seed_vec,
         )
-        extra_cached = list(getattr(assigned, "_ralf_cached", []))
-        assigned = assigned.persist()
     else:
         assigned = assign_to_seeds(
             corpus, seeds, vec_col=vec_col, seed_id=seed_id,
             seed_vec=seed_vec,
-        ).persist()
+        )
+    assigned = persist(assigned)
     a, b = assigned.alias("a"), assigned.alias("b")
     pruned_ids = (
         a.join(
@@ -712,7 +708,7 @@ def semdedup_prune(
         .select(F.col(f"b.{idc}").alias(idc))
         .distinct()
     )
-    out = (
+    return (
         assigned.join(pruned_ids.withColumn("_p", F.lit(True)), idc, "left")
         .select(
             F.col(idc),
@@ -720,7 +716,6 @@ def semdedup_prune(
             F.coalesce(F.col("_p"), F.lit(False)).alias("pruned"),
         )
     )
-    return attach_cached(out, [assigned, *extra_cached])
 
 
 def knn_graph(

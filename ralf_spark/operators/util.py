@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import math
 import re
+import threading
+from contextlib import contextmanager
+from typing import Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _SIZE_RE = re.compile(r"^(\d+)\s*([kmgtp]?)b?$")
@@ -135,23 +139,12 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df.repartition(target)
 
 
-def attach_cached(df: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Record the persisted intermediates a result plan depends on, so the
-    caller can release them after its action (see :func:`unpersist_cached`).
-
-    Persisted blocks otherwise accumulate across repeated operator
-    invocations in a long-lived session (ADVICE r2)."""
-    df._ralf_cached = list(cached)  # type: ignore[attr-defined]
-    return df
-
-
-class CheckpointHandle:
+class _CheckpointHandle:
     """Release handle for a ``localCheckpoint``-ed DataFrame (r9, ADVICE
     r8): ``DataFrame.unpersist`` only talks to the cache manager and never
     frees checkpoint BLOCKS, so a long-lived session leaks them until the
     RDD is garbage-collected. The handle reaches the ``LogicalRDD`` under
-    the checkpointed plan and unpersists its RDD directly. Duck-typed to
-    sit in an ``attach_cached`` list next to plain persisted frames."""
+    the checkpointed plan and unpersists its RDD directly."""
 
     def __init__(self, df: DataFrame):
         self._df = df
@@ -164,11 +157,67 @@ class CheckpointHandle:
             pass  # best-effort: GC + ContextCleaner remain the backstop
 
 
-def unpersist_cached(df: DataFrame, blocking: bool = False) -> None:
-    """Release intermediates persisted by the operator that built ``df``.
+# Persisted state has ONE owner: a per-thread stack of scopes, with an
+# implicit root scope. ``persist`` / ``local_checkpoint`` register a frame
+# in the innermost scope; the scope's owner releases all of it at once —
+# ``cache_scope`` on exit, ``unpersist_cached`` on demand, both under the
+# contract stated on ``unpersist_cached``. Operators return plain frames,
+# and composers need not know which intermediates an operator persisted.
+# Scopes are per thread, so a worker thread releasing its own scope
+# leaves the frames of every other thread persisted.
+_scopes = threading.local()
 
-    Call AFTER the final action on ``df`` — the plan re-computes from
-    source if executed again afterwards. No-op for plans without attached
-    cache state."""
-    for cached in getattr(df, "_ralf_cached", []):
-        cached.unpersist(blocking)
+
+def _stack() -> list[list]:
+    stack = getattr(_scopes, "stack", None)
+    if stack is None:
+        stack = _scopes.stack = [[]]
+    return stack
+
+
+def _release(scope: list, blocking: bool) -> None:
+    while scope:
+        scope.pop().unpersist(blocking)
+
+
+def persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """``df.persist(level)``, owned by the calling thread's innermost
+    scope."""
+    df = df.persist() if level is None else df.persist(level)
+    _stack()[-1].append(df)
+    return df
+
+
+def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, owned by the calling thread's
+    innermost scope (which frees the checkpoint blocks, not just the cache
+    entry)."""
+    df = df.localCheckpoint(eager=eager)
+    _stack()[-1].append(_CheckpointHandle(df))
+    return df
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Own everything persisted inside the block, and release it on exit
+    (also on an exception)."""
+    stack, scope = _stack(), []
+    stack.append(scope)
+    try:
+        yield
+    finally:
+        stack.pop()
+        _release(scope, False)
+
+
+def unpersist_cached(df: DataFrame, blocking: bool = False) -> None:
+    """Release everything persisted in the calling thread's innermost
+    scope.
+
+    Contract: call it after the final action on EVERY result built since
+    that scope opened — ``df`` and its siblings alike — since each of them
+    may read what is released. A released persist recomputes from source
+    if run again; a released checkpoint cannot run again. ``df`` names the
+    result the call follows; the scope, not the frame, decides what is
+    freed."""
+    _release(_stack()[-1], blocking)

@@ -32,6 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ralf_spark.operators.util import persist
 from ralf_spark.table import FeatureTable
 
 
@@ -363,7 +364,7 @@ def salted_sliding_count_window(
         # key, so the rest branch must admit cold NULL keys explicitly
         # or they vanish from the output (ADVICE r10 — row identity)
         rest = df.where(F.col(key).isNull() | ~F.col(key).isin(hot))
-    hdf = df.where(is_hot).persist()
+    hdf = persist(df.where(is_hot))
     w = Window.partitionBy(key).orderBy(*table.order_cols())
     ranked_rest = rest.withColumn("_rn", F.row_number().over(w))
     # joins below use null-safe equality so a HOT NULL key flows through
@@ -425,7 +426,6 @@ def salted_sliding_count_window(
     )
     ranked = ranked_rest.select(*df.columns, "_rn").unionByName(ranked_hot)
     ranked = ranked.withColumn("_slide", F.lit(slide).cast("long"))
-    out = _explode_emit(ranked, key, payload, window_size)
-    from ralf_spark.operators.util import attach_cached
-
-    return FeatureTable(attach_cached(out, [hdf]), key=key)
+    return FeatureTable(
+        _explode_emit(ranked, key, payload, window_size), key=key
+    )

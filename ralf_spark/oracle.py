@@ -106,9 +106,8 @@ def compare_query(
         sdf = fn(spark, sf_dir)
         s_cols = list(sdf.columns)
         s_rows = [tuple(r) for r in sdf.collect()]
-        # release intermediates the operator persisted for this plan
-        # (attach_cached convention) — the sweep runs 160+ queries in one
-        # session, and leaked storage blocks would accumulate
+        # the sweep runs 200+ queries in one session: release what this
+        # one persisted before the next one runs
         unpersist_cached(sdf)
         rel = con.execute(oracle)
         o_cols = [d[0] for d in rel.description]

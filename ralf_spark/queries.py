@@ -971,19 +971,14 @@ def salted_sliding_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, window_size=64, slide_size=4, payload_cols=["value"],
         target_ratio=0.1, stats_skip_rows=0,
     )
-    out = (
-        win.df.select(
-            "user_id",
-            "pos",
-            F.round(
-                F.aggregate("window", F.lit(0.0), lambda a, x: a + x["value"]),
-                4,
-            ).alias("w_sum"),
-        )
-        .orderBy("user_id", "pos")
-    )
-    out._ralf_cached = getattr(win.df, "_ralf_cached", [])
-    return out
+    return win.df.select(
+        "user_id",
+        "pos",
+        F.round(
+            F.aggregate("window", F.lit(0.0), lambda a, x: a + x["value"]),
+            4,
+        ).alias("w_sum"),
+    ).orderBy("user_id", "pos")
 
 
 @query(

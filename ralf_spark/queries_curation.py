@@ -29,6 +29,7 @@ from ralf_spark.operators.text_analysis import (
     pii_counts,
     pii_counts_sql,
 )
+from ralf_spark.operators.util import cache_scope, local_checkpoint, persist
 from ralf_spark.queries import _docs_par, _scratch, _t, query
 from ralf_spark.table import FeatureTable
 
@@ -359,11 +360,8 @@ def concurrent_minhash_adds_serial_equiv_q(
 
     def add(m: int, wid: str) -> None:
         try:
-            pairs = idx.add(part(m), batch_tag=f"t{m}", writer_id=wid)
-            pairs.count()
-            from ralf_spark.operators.util import unpersist_cached
-
-            unpersist_cached(pairs)
+            with cache_scope():
+                idx.add(part(m), batch_tag=f"t{m}", writer_id=wid).count()
         except BaseException as e:  # noqa: BLE001 - surfaced below
             errors.append(e)
 
@@ -676,7 +674,6 @@ def curation_pipeline(
         language_id,
         quality_score,
     )
-    from ralf_spark.operators.util import attach_cached
 
     df = _t(spark, sf_dir, "documents").df
     st1 = df.where(language_id(F.col("text")) == "en")
@@ -688,15 +685,15 @@ def curation_pipeline(
     # (r7: warm 11.7s -> measured below; same recompute class as
     # semdedup/minhash — BENCH_NOTES). Cluster spelling: checkpoint each
     # stage to parquet, which is also the natural audit trail of a
-    # curation build. Released via attach_cached after the action.
-    st2 = st1.where(
-        F.round(quality_score(F.col("text")), 4) >= q_min
-    ).persist()
+    # curation build.
+    st2 = persist(
+        st1.where(F.round(quality_score(F.col("text")), 4) >= q_min)
+    )
     t2 = FeatureTable(st2, key="doc_id")
     keep = exact_dedup(t2, on=F.col("text")).df.select(
         F.col("keep_id").alias("doc_id")
     )
-    st3 = st2.join(keep, "doc_id", "left_semi").persist()
+    st3 = persist(st2.join(keep, "doc_id", "left_semi"))
     t3 = FeatureTable(st3, key="doc_id")
     pairs = near_dup_pairs(
         t3, num_perm=num_perm, bands=bands, threshold=jaccard_threshold
@@ -710,15 +707,12 @@ def curation_pipeline(
     # were flat). r9 (ADVICE): eager=False — the checkpointed PLAN is
     # substituted at call time (analysis stays leaf-cheap) but the job
     # runs at the caller's first action, not at plan construction; the
-    # LSH caches therefore stay attached until the caller releases them
-    # (the checkpoint job is their last reader), and the checkpoint
-    # blocks themselves get a release handle in the same list. Local
-    # checkpoint blocks are executor-local (a lost executor loses them);
-    # on a cluster flip to reliable .checkpoint() — identical shape.
-    dup_ids = (
-        pairs.select(F.col("id2").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # LSH caches (its last readers) and the checkpoint blocks therefore
+    # stay in the caller's scope. Local checkpoint blocks are
+    # executor-local (a lost executor loses them); on a cluster flip to
+    # reliable .checkpoint() — identical shape.
+    dup_ids = local_checkpoint(
+        pairs.select(F.col("id2").alias("doc_id")).distinct(), eager=False
     )
     # The lazy checkpoint's LogicalRDD has no size statistics until it
     # materializes, which would flip this anti join (and everything
@@ -728,7 +722,7 @@ def curation_pipeline(
     # below. Unlike the dedup verify join (bucket-stats-guarded, r9),
     # these are id-only projections: even 10⁸ dup ids broadcast at ~1 GB,
     # and a corpus that duplicate-heavy has bigger problems upstream.
-    st4 = st3.join(F.broadcast(dup_ids), "doc_id", "left_anti").persist()
+    st4 = persist(st3.join(F.broadcast(dup_ids), "doc_id", "left_anti"))
     is_eval = stable_hash64(F.col("text"), salt="decon") % 100 < eval_pct
     ev_grams = (
         df.where(is_eval)
@@ -761,7 +755,7 @@ def curation_pipeline(
         )
         .where("kept")
     )
-    out = (
+    return (
         st7.groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_kept"),
@@ -770,17 +764,6 @@ def curation_pipeline(
             F.max("doc_id").alias("max_doc"),
         )
         .orderBy("source")
-    )
-    # r9: the LSH caches ride along until the caller's action materializes
-    # the (lazy) dup_ids checkpoint — their last reader — and the
-    # checkpoint blocks get their own release handle
-    from ralf_spark.operators.util import CheckpointHandle
-
-    return attach_cached(
-        out,
-        [st2, st3, st4]
-        + list(getattr(pairs, "_ralf_cached", []))
-        + [CheckpointHandle(dup_ids)],
     )
 
 
@@ -904,13 +887,7 @@ def incremental_gram_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership-in-store OR repeated-within-batch is exactly
     corpus-so-far occurrence >= 2 (see :class:`GramIndex`). Only the new
     half is tokenized/hashed in the add round — the incremental-cost
-    contract, same shape as ``incremental_minhash_index``.
-
-    The returned plan carries the add's persisted intermediates via the
-    ``attach_cached`` convention (operators/util.py): every harness
-    caller — ``compare_query``, the sweep, the bench drain — calls
-    ``unpersist_cached`` after its action, which releases them; a direct
-    caller that keeps the session alive must do the same."""
+    contract, same shape as ``incremental_minhash_index``."""
     import hashlib as _hl
 
     from ralf_spark.operators.dedup import GramIndex
@@ -925,17 +902,7 @@ def incremental_gram_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.df.where(F.col("doc_id") % 2 == 1), key="doc_id"
     )
     idx.build(even)
-    spans = idx.add(odd)
-    # re-attach through the sort: orderBy returns a NEW DataFrame and
-    # drops the attribute-based cache handle, so the harness's
-    # unpersist_cached would otherwise be a no-op here (r12 review —
-    # this closes ADVICE r11 #4 properly instead of documenting it)
-    from ralf_spark.operators.util import attach_cached
-
-    return attach_cached(
-        spans.orderBy("doc_id", "span_start"),
-        getattr(spans, "_ralf_cached", []),
-    )
+    return idx.add(odd).orderBy("doc_id", "span_start")
 
 
 @query(
@@ -975,11 +942,9 @@ def gram_index_retro_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.df.where(F.col("doc_id") % 2 == 1), key="doc_id"
     )
     idx.build(even)
-    spans = idx.add(odd)
-    spans.count()  # drain the add (its span output is the odd half only)
-    from ralf_spark.operators.util import unpersist_cached
-
-    unpersist_cached(spans)
+    with cache_scope():
+        # drain the add (its span output is the odd half only)
+        idx.add(odd).count()
     return idx.retro(spark).orderBy("doc_id", "span_start")
 
 
@@ -1021,15 +986,14 @@ def gram_index_retro_delta_spans_q(spark: SparkSession, sf_dir: str) -> DataFram
     # r14 two-phase watermark: each cadence is consumed (persisted +
     # drained) BEFORE commit_retro_delta promotes its pending tags —
     # the exactly-once sequencing a crash-safe caller uses
-    d1 = idx.retro_delta(spark).persist()  # covers the base tag
+    d1 = persist(idx.retro_delta(spark))  # covers the base tag
     d1.count()
     idx.commit_retro_delta(spark)
-    spans = idx.add(odd)
-    spans.count()  # drain the add
-    from ralf_spark.operators.util import attach_cached, unpersist_cached
-
-    unpersist_cached(spans)
-    d2 = idx.retro_delta(spark).persist()  # covers the odd batch's tag
+    # release the add's intermediates only: d1 must survive, since a
+    # recompute would read the store the commit just changed
+    with cache_scope():
+        idx.add(odd).count()  # drain the add
+    d2 = persist(idx.retro_delta(spark))  # covers the odd batch's tag
     d2.count()
     idx.commit_retro_delta(spark)
     folded = d2.unionByName(
@@ -1039,14 +1003,7 @@ def gram_index_retro_delta_spans_q(spark: SparkSession, sf_dir: str) -> DataFram
             "left_anti",
         )
     )
-    cached = (
-        [d1, d2]
-        + list(getattr(d1, "_ralf_cached", []))
-        + list(getattr(d2, "_ralf_cached", []))
-    )
-    return attach_cached(
-        folded.orderBy("doc_id", "span_start"), cached
-    )
+    return folded.orderBy("doc_id", "span_start")
 
 
 from ralf_spark.operators.dedup import (  # noqa: E402
@@ -1093,11 +1050,8 @@ def concurrent_gram_adds_serial_equiv_q(
 
     def add(m: int, wid: str) -> None:
         try:
-            spans = idx.add(part(m), batch_tag=f"t{m}", writer_id=wid)
-            spans.count()
-            from ralf_spark.operators.util import unpersist_cached
-
-            unpersist_cached(spans)
+            with cache_scope():
+                idx.add(part(m), batch_tag=f"t{m}", writer_id=wid).count()
         except BaseException as e:  # noqa: BLE001 - surfaced below
             errors.append(e)
 

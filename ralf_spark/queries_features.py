@@ -657,14 +657,8 @@ def decontaminate_spans_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = FeatureTable(docs.where(~is_eval), key="doc_id")
     eval_t = FeatureTable(docs.where(is_eval), key="doc_id")
-    from ralf_spark.operators.util import attach_cached
-
     spans = cross_corpus_duplicate_spans(train, eval_t, min_tokens=_DECON_N)
-    # re-attach through the sort (attribute-based handle; r12 review)
-    return attach_cached(
-        spans.orderBy("doc_id", "span_start"),
-        getattr(spans, "_ralf_cached", []),
-    )
+    return spans.orderBy("doc_id", "span_start")
 
 
 def _decon_removal_oracle_sql() -> str:
@@ -708,17 +702,12 @@ def decontaminate_removal_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = FeatureTable(docs.where(~is_eval), key="doc_id")
     eval_t = FeatureTable(docs.where(is_eval), key="doc_id")
     out = remove_contaminated_spans(train, eval_t, min_tokens=_DECON_N)
-    from ralf_spark.operators.util import attach_cached
-
-    return attach_cached(
-        out.select(
-            "doc_id",
-            F.md5("clean_text").alias("clean_md5"),
-            "n_kept",
-            "n_removed",
-        ).orderBy("doc_id"),
-        getattr(out, "_ralf_cached", []),
-    )
+    return out.select(
+        "doc_id",
+        F.md5("clean_text").alias("clean_md5"),
+        "n_kept",
+        "n_removed",
+    ).orderBy("doc_id")
 
 
 @query("streaming_decontaminate_eval", _decon_removal_oracle_sql())
@@ -1003,6 +992,7 @@ def textrank_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the same {iters} iterations as chained CTEs, so the
     estimator output itself is cross-engine-checked."""
     from ralf_spark.functions.text import tokens, word_shingles
+    from ralf_spark.operators.util import persist
 
     d, iters = _TEXTRANK_D, _TEXTRANK_ITERS
     docs = _docs_par(spark, sf_dir).df
@@ -1023,11 +1013,12 @@ def textrank_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache the bigram counts: the symmetric union references them twice,
     # so the corpus-sized counting job would run 2x inside the edges
     # materialization (r7; same recompute class as semdedup/minhash)
-    pairs = pairs.cache()
-    edges = pairs.selectExpr("a AS src", "b AS dst", "c AS w").unionAll(
-        pairs.selectExpr("b AS src", "a AS dst", "c AS w")
+    pairs = persist(pairs)
+    edges = persist(
+        pairs.selectExpr("a AS src", "b AS dst", "c AS w").unionAll(
+            pairs.selectExpr("b AS src", "a AS dst", "c AS w")
+        )
     )
-    edges = edges.cache()
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
@@ -1056,7 +1047,7 @@ def textrank_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.lit(d) * F.coalesce(F.col("acc"), F.lit(0.0))
             ).alias("pr"),
         )
-    out = (
+    return (
         ranks.select(
             F.col("node").alias("token"),
             F.round(F.col("pr") * 1000, 4).alias("textrank_x1000"),
@@ -1064,12 +1055,6 @@ def textrank_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("pr"), "token")
         .limit(20)
     )
-    # hand the two persisted intermediates to the caller for release
-    # (the sweep/driver run 164 queries in one session; leaked storage
-    # blocks would accumulate — same convention as semdedup/curation)
-    from ralf_spark.operators.util import attach_cached
-
-    return attach_cached(out, [pairs, edges])
 
 
 @query(

@@ -27,6 +27,7 @@ from ralf_spark.operators.sketches import (
     weighted_sample_sql,
 )
 from ralf_spark.operators.text_analysis import add_winnow_fingerprints
+from ralf_spark.operators.util import persist
 from ralf_spark.queries import _docs_par, _scratch, _t, query
 
 
@@ -214,9 +215,9 @@ def winnow_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     winnow_shared_pairs — the expensive-expression guard does not cover
     Generate inputs)."""
     docs = _docs_par(spark, sf_dir)
-    fp = add_winnow_fingerprints(docs.df).select(
-        "doc_id", "fingerprints"
-    ).persist()
+    fp = persist(
+        add_winnow_fingerprints(docs.df).select("doc_id", "fingerprints")
+    )
     return (
         fp.select(
             "doc_id", F.posexplode("fingerprints").alias("pos0", "fingerprint")
@@ -258,13 +259,10 @@ def winnow_shared_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     node, which puts the whole shingle+md5 pipeline back inside the
     per-window lambda (measured 43s → 3s at sf0.01; the Project-collapse
     expensive-expression check does not guard Generate inputs).
-    Cluster-scale spelling: checkpoint to parquet; release with
-    ``unpersist_cached`` after the action."""
+    Cluster-scale spelling: checkpoint to parquet."""
     docs = _docs_par(spark, sf_dir)
-    fp = (
-        add_winnow_fingerprints(docs.df)
-        .select("doc_id", "fingerprints")
-        .persist()
+    fp = persist(
+        add_winnow_fingerprints(docs.df).select("doc_id", "fingerprints")
     )
     ex = fp.select("doc_id", F.explode("fingerprints").alias("f"))
     rare = (

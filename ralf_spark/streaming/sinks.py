@@ -1725,7 +1725,7 @@ def foreach_batch_index_add(
         auto_maintain = AUTO_MAINTAIN_BATCHES
 
     def add(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.util import unpersist_cached
+        from ralf_spark.operators.util import cache_scope
 
         if not batch_df.take(1):
             return
@@ -1733,21 +1733,21 @@ def foreach_batch_index_add(
         tag = f"{tag_prefix}{batch_id}"
         if tag in _read_compacted_tags(spark, pairs_path):
             return  # replay of a tag already folded into the compacted log
-        pairs = index.add(
-            FeatureTable(batch_df, key=key),
-            text_col=text_col,
-            threshold=threshold,
-            batch_tag=tag,
-            writer_id=writer_id,
-        )
-        (
-            pairs.withColumn("_batch", F.lit(tag))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(pairs_path)
-        )
-        unpersist_cached(pairs)
+        with cache_scope():
+            pairs = index.add(
+                FeatureTable(batch_df, key=key),
+                text_col=text_col,
+                threshold=threshold,
+                batch_tag=tag,
+                writer_id=writer_id,
+            )
+            (
+                pairs.withColumn("_batch", F.lit(tag))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch")
+                .parquet(pairs_path)
+            )
         if auto_maintain:
             from ralf_spark.connectors import write_json_sidecar
             from ralf_spark.layout import (
@@ -1808,30 +1808,30 @@ def foreach_batch_gram_decontaminate(
     def clean(batch_df: DataFrame, batch_id: int) -> None:
         from ralf_spark.connectors import acquire_writer_lease
         from ralf_spark.operators.dedup import _cut_spans
-        from ralf_spark.operators.util import unpersist_cached
+        from ralf_spark.operators.util import cache_scope
         from ralf_spark.table import FeatureTable
 
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
         acquire_writer_lease(spark, out_path)  # guards the OUTPUT only
-        spans = index.check(
-            FeatureTable(batch_df, key=key), text_col=text_col
-        )
-        # cut with the INDEX's tokenizer mode (r13): span positions are
-        # indexes into that tokenizer's stream
-        cleaned = _cut_spans(
-            batch_df, key, text_col, spans,
-            getattr(index, "token_mode", "ascii"),
-        )
-        (
-            cleaned.withColumn("_batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_path)
-        )
-        unpersist_cached(spans)
+        with cache_scope():
+            spans = index.check(
+                FeatureTable(batch_df, key=key), text_col=text_col
+            )
+            # cut with the INDEX's tokenizer mode (r13): span positions
+            # are indexes into that tokenizer's stream
+            cleaned = _cut_spans(
+                batch_df, key, text_col, spans,
+                getattr(index, "token_mode", "ascii"),
+            )
+            (
+                cleaned.withColumn("_batch", F.lit(f"b{batch_id}"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch")
+                .parquet(out_path)
+            )
 
     return df.writeStream.foreachBatch(clean)
 
@@ -1865,26 +1865,26 @@ def foreach_batch_minhash_screen(
 
     def screen(batch_df: DataFrame, batch_id: int) -> None:
         from ralf_spark.connectors import acquire_writer_lease
-        from ralf_spark.operators.util import unpersist_cached
+        from ralf_spark.operators.util import cache_scope
         from ralf_spark.table import FeatureTable
 
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
         acquire_writer_lease(spark, out_path)  # guards the OUTPUT only
-        pairs = index.check(
-            FeatureTable(batch_df, key=key),
-            text_col=text_col,
-            threshold=threshold,
-        )
-        (
-            pairs.withColumn("_batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_path)
-        )
-        unpersist_cached(pairs)
+        with cache_scope():
+            pairs = index.check(
+                FeatureTable(batch_df, key=key),
+                text_col=text_col,
+                threshold=threshold,
+            )
+            (
+                pairs.withColumn("_batch", F.lit(f"b{batch_id}"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch")
+                .parquet(out_path)
+            )
 
     return df.writeStream.foreachBatch(screen)
 
@@ -1930,7 +1930,7 @@ def foreach_batch_gram_dedup(
         auto_maintain = AUTO_MAINTAIN_BATCHES
 
     def add(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.util import unpersist_cached
+        from ralf_spark.operators.util import cache_scope
 
         if not batch_df.take(1):
             return
@@ -1938,20 +1938,20 @@ def foreach_batch_gram_dedup(
         tag = f"{tag_prefix}{batch_id}"
         if tag in _read_compacted_tags(spark, spans_path):
             return  # replay of a tag already folded into the compacted log
-        spans = index.add(
-            FeatureTable(batch_df, key=key),
-            text_col=text_col,
-            batch_tag=tag,
-            writer_id=writer_id,
-        )
-        (
-            spans.withColumn("_batch", F.lit(tag))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(spans_path)
-        )
-        unpersist_cached(spans)
+        with cache_scope():
+            spans = index.add(
+                FeatureTable(batch_df, key=key),
+                text_col=text_col,
+                batch_tag=tag,
+                writer_id=writer_id,
+            )
+            (
+                spans.withColumn("_batch", F.lit(tag))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_batch")
+                .parquet(spans_path)
+            )
         if auto_maintain:
             from ralf_spark.connectors import write_json_sidecar
             from ralf_spark.layout import (

@@ -27,6 +27,11 @@ def spark():
     yield spark
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD the session currently holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

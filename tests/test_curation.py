@@ -434,8 +434,9 @@ def test_curation_release_frees_all_blocks_including_checkpoint(spark):
     """r9 (ADVICE r8): curation_pipeline's dup-id localCheckpoint is lazy
     (no job at plan construction... beyond the dedup stats agg) and its
     blocks — plus every persisted stage AND the LSH caches that now ride
-    along until the checkpoint materializes — release through the single
-    attach_cached list. A long-lived session must end at zero cached RDDs."""
+    along until the checkpoint materializes — release through the
+    caller's one ``unpersist_cached``. A long-lived session must end at
+    zero cached RDDs."""
     from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.queries_curation import curation_pipeline
 
@@ -452,18 +453,24 @@ def test_curation_release_frees_all_blocks_including_checkpoint(spark):
 
 
 def test_checkpoint_handle_releases_blocks(spark):
-    """CheckpointHandle reaches the LogicalRDD under a localCheckpoint'ed
-    plan and unpersists it — DataFrame.unpersist alone cannot."""
-    from ralf_spark.operators.util import CheckpointHandle
+    """A registered local checkpoint's release reaches the LogicalRDD
+    under the checkpointed plan and unpersists it — DataFrame.unpersist
+    alone cannot."""
+    from ralf_spark.operators.util import (
+        cache_scope,
+        local_checkpoint,
+        unpersist_cached,
+    )
 
     sc = spark.sparkContext
     before = {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
-    df = spark.range(500).selectExpr("id", "id * 2 AS v").localCheckpoint(
-        eager=False
-    )
-    assert df.count() == 500
-    mid = {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
-    assert len(mid - before) == 1
-    CheckpointHandle(df).unpersist(True)
+    with cache_scope():
+        df = local_checkpoint(
+            spark.range(500).selectExpr("id", "id * 2 AS v"), eager=False
+        )
+        assert df.count() == 500
+        mid = {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+        assert len(mid - before) == 1
+        unpersist_cached(df, blocking=True)
     after = {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
     assert after - before == set()

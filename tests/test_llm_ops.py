@@ -291,17 +291,18 @@ def test_minhash_index_add_spelling_knob_identical(spark, tmp_path):
 
 def test_near_dup_unpersist_cached_releases_storage(spark):
     from ralf_spark.operators.util import unpersist_cached
+    from tests.conftest import persisted_rdd_ids
 
     t = _docs(spark, [(1, "a b c d e"), (2, "a b c d f")])
+    before = persisted_rdd_ids(spark)
     out = near_dup_pairs(t)
     out.collect()
     # three persisted intermediates since r8: shingle projection, band
     # buckets, and the candidate pairs (the verification prefilter reads
     # the pair set three times)
-    assert len(out._ralf_cached) == 3
-    assert all(df.storageLevel.useMemory for df in out._ralf_cached)
+    assert len(persisted_rdd_ids(spark) - before) == 3
     unpersist_cached(out, blocking=True)
-    assert not any(df.storageLevel.useMemory for df in out._ralf_cached)
+    assert persisted_rdd_ids(spark) - before == set()
 
 
 def test_minhash_bad_hash_fn_raises():

@@ -52,22 +52,20 @@ def test_rows_only_queries_run(spark):
 
 
 def test_compare_query_releases_attached_caches(spark):
-    """r7 review: the gate path itself must release attach_cached
-    intermediates — the sweep runs 160+ queries in ONE session, and a
-    query that persists (textrank, semdedup, curation) would otherwise
-    leak storage blocks across the whole run."""
+    """r7 review: the gate path itself must release what the query
+    persisted — the sweep runs 200+ queries in ONE session, and a query
+    that persists (textrank, semdedup, curation) would otherwise leak
+    storage blocks across the whole run."""
     from pyspark import StorageLevel
 
-    from ralf_spark.operators.util import attach_cached
+    from ralf_spark.operators.util import persist
 
     holder = {}
 
     def fn(spark_, sf_dir_):
-        c = spark_.range(5).cache()
+        c = persist(spark_.range(5))
         holder["c"] = c
-        return attach_cached(
-            c.selectExpr("CAST(1 AS BIGINT) AS x").limit(1), [c]
-        )
+        return c.selectExpr("CAST(1 AS BIGINT) AS x").limit(1)
 
     res = compare_query(
         spark, "t", fn, "SELECT CAST(1 AS BIGINT) AS x", SF_DIR
